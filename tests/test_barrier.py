@@ -457,52 +457,134 @@ def test_barrier_checkpoint_rejects_stale_fingerprint(spark, reg_df, tmp_path):
             reg_df, feature_cols=fc, label_col="label")
 
 
-def test_barrier_scan_partitioning_no_shuffle(spark, tmp_path):
+def _spy_barrier_frames(monkeypatch, df):
+    """Record every frame the fit runs its barrier stage over."""
+    seen = []
+    real = type(df).mapInPandas
+
+    def spy(self, func, schema, barrier=False, **kw):
+        if barrier:
+            seen.append(self)
+        return real(self, func, schema, barrier=barrier, **kw)
+
+    monkeypatch.setattr(type(df), "mapInPandas", spy)
+    return seen
+
+
+def _rows_per_task(frame) -> list[int]:
+    import pyspark.sql.functions as F
+    got = dict(frame.groupBy(F.spark_partition_id().alias("p")).count()
+               .rdd.map(tuple).collect())
+    return [got.get(i, 0) for i in range(frame.rdd.getNumPartitions())]
+
+
+def _write_one_row_group(pdf, path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path,
+                   row_group_size=len(pdf))
+
+
+def test_barrier_scan_partitioning_no_shuffle(spark, tmp_path, monkeypatch):
     """Non-ranking fits adopt the parquet scan's own splits as barrier
-    tasks instead of repartition()ing the training set (round 11: the
-    blanket shuffle cost 20-65 s at sf10 before the first gradient).
-    Pins the three moving parts on a many-split input WITH eval frames
-    (union under the barrier stage): the fit succeeds, the
-    maxPartitionBytes resize is restored afterwards, and the model
-    equals the repartition path's (gradient sums are allreduced
-    identically regardless of row placement for this integer-exact
-    label, so trees must match node-for-node)."""
+    tasks, skipping a repartition() of the training set, only when the
+    sketch scan counted those splits balanced.  Pins both branches at
+    3 ranks (120k rows at 40k rows per rank):
+    - three equal files: each is one split, so the splits are adopted
+      and no Exchange sits under the barrier stage;
+    - the same rows as ONE row group cut into 3 byte ranges: only one
+      range holds rows, so the fit repartitions and every rank gets
+      its share within 10%;
+    - the trees of both paths match node-for-node (gradient sums are
+      allreduced identically regardless of row placement for this
+      integer-exact label).
+    A many-split input still takes the maxPartitionBytes resize, and
+    the engine restores the conf afterwards."""
+    import os
+
     import pandas as pd
     key = "spark.sql.files.maxPartitionBytes"
     orig = spark.conf.get(key, "134217728")
     rng = np.random.default_rng(3)
-    pdf = pd.DataFrame(rng.integers(0, 8, size=(40_000, 3)).astype(float),
+    n = 120_000
+    pdf = pd.DataFrame(rng.integers(0, 8, size=(n, 3)).astype(float),
                        columns=["a", "b", "c"])
     # label integer-exact: partial gradient sums are order-independent
     pdf["label"] = pdf["a"] * 2 + pdf["b"]
-    path = str(tmp_path / "many_files_pq")
-    spark.createDataFrame(pdf).repartition(40).write.parquet(path)
+    even = tmp_path / "three_files_pq"
+    even.mkdir()
+    for i in range(3):
+        _write_one_row_group(pdf.iloc[i::3], str(even / f"part-{i}.parquet"))
+    one = str(tmp_path / "one_row_group.parquet")
+    _write_one_row_group(pdf, one)
+    seen = _spy_barrier_frames(monkeypatch, spark.range(1))
+    params = dict(num_boost_round=3, max_depth=3, max_bin=64, eta=0.5)
+    fc = ["a", "b", "c"]
     try:
-        # force the scan to split finely so np_in > n_part and the
-        # resize + adopt path (not the small-input repartition) runs
-        spark.conf.set(key, str(64 * 1024))
-        df = spark.read.parquet(path)
-        assert df.rdd.getNumPartitions() > 32
-        params = dict(num_boost_round=3, max_depth=3, max_bin=64, eta=0.5)
-        m1 = SparkBooster(TrainParams(**params)).fit(
-            df, feature_cols=["a", "b", "c"], label_col="label",
-            evals=[(df, "eval")])
-        # engine restored the conf to what this test set
-        assert spark.conf.get(key) == str(64 * 1024)
-        assert m1.eval_history["eval"]["rmse"][-1] < \
-            m1.eval_history["eval"]["rmse"][0]
-        # the repartition path (single coarse split input) agrees
-        spark.conf.set(key, orig)
-        m2 = SparkBooster(TrainParams(**params)).fit(
-            spark.createDataFrame(pdf), feature_cols=["a", "b", "c"],
+        m_even = SparkBooster(TrainParams(**params)).fit(
+            spark.read.parquet(str(even)), feature_cols=fc,
             label_col="label")
-        for r1, r2 in zip(m1.trees, m2.trees):
+        frame = seen[-1]
+        assert frame.rdd.getNumPartitions() == 3
+        assert "Exchange" not in \
+            frame._jdf.queryExecution().executedPlan().toString()
+        assert sorted(_rows_per_task(frame)) == [n // 3] * 3
+
+        # split the single row group's file into exactly 3 byte ranges
+        spark.conf.set(key, str(os.path.getsize(one) // 3 + 1))
+        df_one = spark.read.parquet(one)
+        assert df_one.rdd.getNumPartitions() == 3
+        m_one = SparkBooster(TrainParams(**params)).fit(
+            df_one, feature_cols=fc, label_col="label")
+        frame = seen[-1]
+        assert "Exchange" in \
+            frame._jdf.queryExecution().executedPlan().toString()
+        rows = _rows_per_task(frame)
+        assert len(rows) == 3 and sum(rows) == n
+        assert max(rows) <= 1.1 * n / 3 and min(rows) >= 0.9 * n / 3, rows
+
+        for r1, r2 in zip(m_even.trees, m_one.trees):
             for t1, t2 in zip(r1, r2):
                 assert t1.feature == t2.feature
                 assert t1.split_bin == t2.split_bin
                 assert np.allclose(t1.leaf_value, t2.leaf_value)
+
+        # many tiny splits: the resize branch grows the conf while the
+        # barrier plans, then restores what the caller set
+        spark.conf.set(key, str(16 * 1024))
+        df_many = spark.read.parquet(str(even))
+        assert df_many.rdd.getNumPartitions() > 3
+        m_many = SparkBooster(TrainParams(**params)).fit(
+            df_many, feature_cols=fc, label_col="label")
+        assert spark.conf.get(key) == str(16 * 1024)
+        assert [t.feature for r in m_many.trees for t in r] == \
+            [t.feature for r in m_even.trees for t in r]
     finally:
         spark.conf.set(key, orig)
+
+
+def test_barrier_eval_set_fit_on_one_row_group_file(spark, tmp_path):
+    """An eval-set fit at 2 ranks never adopts scan splits: the eval
+    frames ride a unionByName, which Spark rejects under a barrier
+    stage [SPARK-24820].  One-row-group training file (one split) plus
+    an eval frame gave a 2-split union that matched the 2 planned ranks
+    and failed; this is the cv() fold-0 case with > 40k train rows."""
+    import pandas as pd
+    rng = np.random.default_rng(11)
+    n = 50_000
+    pdf = pd.DataFrame(rng.integers(0, 8, size=(n, 3)).astype(float),
+                       columns=["a", "b", "c"])
+    pdf["label"] = pdf["a"] * 2 + pdf["b"]
+    path = str(tmp_path / "train.parquet")
+    _write_one_row_group(pdf, path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    m = SparkBooster(TrainParams(num_boost_round=3, max_depth=3, max_bin=64,
+                                 eta=0.5)).fit(
+        df, feature_cols=["a", "b", "c"], label_col="label",
+        evals=[(df, "eval")])
+    rmse = m.eval_history["eval"]["rmse"]
+    assert len(rmse) == 3 and rmse[-1] < rmse[0]
 
 
 def test_mpb_conf_restored_on_setup_exception(spark, sf_dir):

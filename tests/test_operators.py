@@ -81,6 +81,17 @@ def test_approx_cuts_extra_sums_fused(spark):
     assert len(cuts) == 1 and (np.diff(cuts[0]) > 0).all()
 
 
+def test_approx_cuts_split_rows(spark):
+    # per-split row counts ride the same scan without moving the cuts
+    pdf = pd.DataFrame({"x": np.arange(1000, dtype=float) % 97})
+    df = spark.createDataFrame(pdf).repartition(3)
+    want = [len(p) for p in df.rdd.glom().collect()]
+    cuts, extra = sketch.approx_cuts(df, ["x"], 16, split_rows=True)
+    assert extra["_split_rows_"] == dict(enumerate(want))
+    plain = sketch.approx_cuts(df, ["x"], 16)
+    assert np.array_equal(cuts[0], plain[0])
+
+
 def test_quantize_expr_matches_pandas_and_numpy(spark, reg_df, reg_data):
     X, _ = reg_data
     cuts = [core.make_cuts(X[:, i], 8) for i in range(2)]

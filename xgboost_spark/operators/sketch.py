@@ -33,7 +33,8 @@ def _finish_cuts(qs: list[float], vmax: float) -> np.ndarray:
 
 
 def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
-                accuracy: int | None = None, extra_sums=None):
+                accuracy: int | None = None, extra_sums=None,
+                split_rows: bool = False):
     """Per-feature bin boundaries via a distributed compaction sketch.
 
     Equivalent role to `HistogramCuts` build
@@ -58,6 +59,13 @@ def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
     intercept sums ride here so cuts + base score cost one scan, not
     two).  When given, returns ``(cuts, dict)``.
 
+    ``split_rows``: also count the rows of every scan split in the same
+    scan; the returned dict then carries ``"_split_rows_"``, a
+    ``{split index: rows}`` map with one entry per split whose task ran
+    (the trainer reads it to decide whether the splits are balanced
+    enough to serve as barrier ranks).  Implies the ``(cuts, dict)``
+    return.
+
     Measured and REJECTED (round-15 optimization pass): rewriting
     ``compact`` as ``mapInArrow`` (skip the Arrow->pandas conversion
     per batch).  Cut values stayed bit-identical (same batch stream,
@@ -65,8 +73,10 @@ def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
     all-double columns is near-zero-copy, so the interleaved A/B at
     sf0.1 read best-of-6 0.94 s (pandas) vs 1.03 s (arrow) — no win.
     The remaining sf0.1 cuts cost is the ONE-core scan+sketch of a
-    single-row-group parquet (a bench-data artifact — any real layout
-    parallelizes the map) plus ~0.3 s of fixed action latency;
+    single-row-group parquet (pyarrow writes any file under ~1M rows
+    as one row group, so real small inputs have this layout too; a
+    multi-row-group or multi-file layout parallelizes the map) plus
+    ~0.3 s of fixed action latency;
     repartitioning the scan or resizing Arrow batches both CHANGE the
     compaction points and drift every unpinned-cuts oracle (round-14
     rejections 1 and 5), so this stage stays as is.
@@ -91,6 +101,7 @@ def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
         tot = np.zeros(nf)
         mx = np.full(nf, -np.inf)
         sums = np.zeros(n_specs)
+        n_split = 0
         cap = max(4 * s, 65536)
 
         def squash(i: int, k: int):
@@ -110,6 +121,7 @@ def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            n_split += len(pdf)
             for i, c in enumerate(cols):
                 x = pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
                 x = x[~np.isnan(x)]
@@ -138,6 +150,11 @@ def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
                              bufs[i][0][0].tolist()))
         if n_specs:
             rows.append((-1, 0.0, 0.0, sums.tolist()))
+        if split_rows:
+            from pyspark import TaskContext
+            rows.append((-2, 0.0, 0.0,
+                         [float(TaskContext.get().partitionId()),
+                          float(n_split)]))
         yield pd.DataFrame(rows, columns=["fi", "n", "mx", "smp"])
 
     parts = src.mapInPandas(
@@ -154,6 +171,10 @@ def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
                 acc += np.asarray(r, dtype=np.float64)
             return pd.DataFrame({"fi": [-1], "mx": [0.0],
                                  "qs": [acc.tolist()]})
+        if fi == -2:
+            # per-split row counts: (split index, rows) pairs, flattened
+            return pd.DataFrame({"fi": [-2], "mx": [0.0], "qs": [
+                [float(v) for r in pdf["smp"] for v in r]]})
         vals = np.concatenate([np.asarray(r, dtype=np.float64)
                                for r in pdf["smp"]])
         wts = np.concatenate([np.full(len(r), n_p / len(r))
@@ -172,10 +193,15 @@ def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
               .applyInPandas(merge, "fi int, mx double, qs array<double>")
               .collect())
     sum_row = None
-    if n_specs:
+    if n_specs or split_rows:
         srow = next((r for r in merged if r["fi"] == -1), None)
         sum_row = {name: (float(srow["qs"][j]) if srow is not None else None)
                    for j, (name, _v, _w) in enumerate(specs)}
+    if split_rows:
+        prow = next((r for r in merged if r["fi"] == -2), None)
+        pairs = list(prow["qs"]) if prow is not None else []
+        sum_row["_split_rows_"] = {int(k): int(v) for k, v
+                                   in zip(pairs[::2], pairs[1::2])}
     by_fi = {r["fi"]: r for r in merged if r["fi"] >= 0}
     out = []
     for i in range(nf):
@@ -184,7 +210,7 @@ def approx_cuts(df: DataFrame, cols: list[str], max_bin: int,
             out.append(np.asarray([np.inf]))
         else:
             out.append(_finish_cuts(list(r["qs"]), r["mx"]))
-    return (out, sum_row) if specs else out
+    return (out, sum_row) if (specs or split_rows) else out
 
 
 def weighted_cuts(df: DataFrame, col: str, weight_col: str, max_bin: int,

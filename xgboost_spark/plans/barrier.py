@@ -354,11 +354,23 @@ def supports_barrier(p: TrainParams, obj, evals, callbacks, xgb_model,
     return True, ""
 
 
+def _splits_balanced(split_rows: dict[int, int] | None,
+                     n_splits: int) -> bool:
+    """True when every one of ``n_splits`` scan splits was counted and
+    the fullest holds at most 1.1x the mean (one split is balanced)."""
+    if n_splits == 1:
+        return True
+    if not split_rows or sorted(split_rows) != list(range(n_splits)):
+        return False
+    return max(split_rows.values()) <= 1.1 * sum(split_rows.values()) / n_splits
+
+
 def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                 cuts: list[np.ndarray], cat_mask, base_score: float,
                 mono, isets, n_part: int,
                 evals_raw: list[tuple[DataFrame, str]] | None = None,
                 prev_state: dict | None = None,
+                split_rows: dict[int, int] | None = None,
                 ) -> tuple[list[list[core.Tree]], dict, int | None]:
     """Run the boosting loop in one barrier job.
 
@@ -368,6 +380,10 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
     allreduced partial sums (`functions/metrics.py metric_partial_np`,
     reference metric allreduce `src/metric/elementwise_metric.cu`), so
     early stopping decides identically on every rank.
+
+    ``split_rows``: ``{scan split index: rows}`` counted by the sketch
+    scan (`operators/sketch.py approx_cuts`); the scan's splits become
+    the barrier tasks only when these show them balanced.
 
     Returns (trees per round, eval history, best_iteration).
     """
@@ -407,21 +423,26 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
         # ranking co-locates query groups: the hash shuffle is the point
         sel = sel.repartition(n_part, "qid")
     else:
-        # non-ranking training doesn't care where a row lives — any
-        # task imbalance only idles cores for one barrier level, while
-        # a blanket repartition() round-trips the ENTIRE training set
-        # through the shuffle before the first gradient (measured sf10:
-        # scan+barrier 28-35 s vs 51-99 s with the repartition; at
-        # cluster scale it's a full-data shuffle per fit).  Barrier
-        # stages forbid coalesce() [SPARK-24820], so the shuffle-free
-        # path is to adopt the scan's OWN splits: when they exceed the
-        # slot budget, grow spark.sql.files.maxPartitionBytes (re-read
-        # at action-planning time, so the SAME plan re-splits) until
-        # they fit.  Row-group-starved inputs (small files: one row
-        # group = one split) still pay the repartition to CREATE
-        # parallelism — which also keeps the driver-gate SFs
-        # bit-identical to before this optimization.
-        spark = raw.sparkSession
+        # Non-ranking training doesn't care where a row lives, so when
+        # the scan's own splits already give every rank an even share
+        # they ARE the barrier tasks, and the fit skips a round trip of
+        # the whole training set through the shuffle before the first
+        # gradient (measured sf10: scan+barrier 28-35 s vs 51-99 s with
+        # the repartition).  Adoption needs both of:
+        #  - no eval frames: Spark rejects a unionByName under a barrier
+        #    stage [SPARK-24820];
+        #  - split row counts known to be balanced (max <= 1.1 x mean),
+        #    counted by the sketch scan the fit already ran.  A parquet
+        #    file with one row group (pyarrow writes any file under ~1M
+        #    rows that way) is cut into byte ranges of which only one
+        #    holds rows; adopting those put every row on one rank while
+        #    the others waited in allreduce.
+        # When the scan has more splits than slots, grow
+        # spark.sql.files.maxPartitionBytes (re-read at action-planning
+        # time, so the SAME plan re-splits) until they fit; the sketch's
+        # counts then no longer describe the splits, so that branch
+        # adopts on the split count alone.  Everything else pays the
+        # repartition (barrier stages also forbid coalesce()).
 
         def _np_in() -> int:
             return sel.rdd.getNumPartitions()
@@ -439,21 +460,25 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                     return int(float(s_[: -len(suf)]) * mult)
             return int(s_)
 
-        np_in = _np_in()
-        if np_in > n_part:
-            _mpb_restore = spark.conf.get(key, "134217728")
-            mpb = _parse_bytes(_mpb_restore)
-            for _ in range(4):
-                mpb = int(mpb * (np_in / n_part) * 1.05)
-                spark.conf.set(key, str(mpb))
-                np_in = _np_in()
-                if np_in <= n_part:
-                    break
-        if n_part * 0.6 <= np_in <= n_part:
+        adopt = False
+        if not evals_raw:
+            np_in = _np_in()
+            if np_in > n_part:
+                _mpb_restore = spark.conf.get(key, "134217728")
+                mpb = _parse_bytes(_mpb_restore)
+                for _ in range(4):
+                    mpb = int(mpb * (np_in / n_part) * 1.05)
+                    spark.conf.set(key, str(mpb))
+                    np_in = _np_in()
+                    if np_in <= n_part:
+                        break
+                adopt = n_part * 0.6 <= np_in <= n_part
+            else:
+                adopt = (n_part * 0.6 <= np_in
+                         and _splits_balanced(split_rows, np_in))
+        if adopt:
             n_part = np_in                      # scan splits ARE the tasks
         else:
-            # row-group-starved small input (one split per file can't be
-            # subdivided) or resize over/undershot: full shuffle
             if _mpb_restore is not None:
                 spark.conf.set(key, _mpb_restore)
                 _mpb_restore = None
@@ -574,18 +599,24 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                                      if cm is not None and cm[i]
                                      else core.bin_values(x, cuts_l[i]))
                     bounds_ = None
+                    # copies, not views: a view would pin the frame's
+                    # whole float block for the rest of the loop
                     if has_b:
-                        yl = pdf["label_lower"].to_numpy(dtype=np.float64)
+                        yl = pdf["label_lower"].to_numpy(dtype=np.float64,
+                                                         copy=True)
                         yu = pdf["label_upper"].to_numpy(dtype=np.float64,
-                                                         na_value=np.inf)
+                                                         na_value=np.inf,
+                                                         copy=True)
                         bounds_ = (yl, yu)
-                        y_ = (pdf["label"].to_numpy(dtype=np.float64)
+                        y_ = (pdf["label"].to_numpy(dtype=np.float64,
+                                                    copy=True)
                               if has_y else yl)
                     else:
-                        y_ = pdf["label"].to_numpy(dtype=np.float64)
-                    w_ = (pdf["weight"].to_numpy(dtype=np.float64)
+                        y_ = pdf["label"].to_numpy(dtype=np.float64, copy=True)
+                    w_ = (pdf["weight"].to_numpy(dtype=np.float64, copy=True)
                           if has_w else None)
-                    q_ = (pdf["qid"].to_numpy(dtype=np.int64) if has_q else None)
+                    q_ = (pdf["qid"].to_numpy(dtype=np.int64, copy=True)
+                          if has_q else None)
                     if has_bm:
                         # base_margin REPLACES base_score (predictor.cc:66)
                         m_ = np.repeat(pdf["base_margin"]
@@ -612,6 +643,9 @@ def fit_barrier(params: TrainParams, obj, raw: DataFrame, fnames: list[str],
                 n = len(y)
                 ev_states = [load_rows(full[role == i + 1])
                              for i in range(len(eval_names))]
+                # the loop reads only what load_rows returned: free the
+                # float frames before it starts
+                del parts, full, role
                 _PROF["bin_load"] = time.perf_counter() - _t_sec
 
                 n_bins = max(len(c) for c in cuts_l)

@@ -654,6 +654,7 @@ class SparkBooster:
                 p, obj, evals, callbacks, xgb_model, has_qid=has_q)
         fused_bs = None
         n_rows = None       # known only when the sketch scan runs below
+        split_rows = None   # rows per scan split, same
         if cuts is None:
             sketch_bins = p.max_bin
             if is_approx and barrier_eligible:
@@ -667,7 +668,9 @@ class SparkBooster:
             bs_aggs = (self._base_score_fuse_aggs(raw)
                        if (p.base_score is None and xgb_model is None) else None)
             # an exact row count rides the same scan (one more fused
-            # sum) — it sizes the barrier rank count below for free
+            # sum) — it sizes the barrier rank count below for free;
+            # per-split counts ride it too and tell fit_barrier whether
+            # the scan's splits are balanced enough to be its ranks
             cnt_spec = [("_n_rows_", None, None)]
             # ... and so do the meta-validation bad-row counts (each an
             # 0/1 flag column summed in the same pass)
@@ -679,7 +682,8 @@ class SparkBooster:
                 vm_specs.append((f"_vm_{name}", f"_vm_{name}", None))
             cuts, _bs_row = approx_cuts(
                 vm_src, fnames, sketch_bins,
-                extra_sums=(bs_aggs or []) + cnt_spec + vm_specs)
+                extra_sums=(bs_aggs or []) + cnt_spec + vm_specs,
+                split_rows=barrier_eligible)
             raise_meta_violations(
                 vm_checks, {name: _bs_row.get(f"_vm_{name}")
                             for name, _b, _m in vm_checks})
@@ -687,6 +691,7 @@ class SparkBooster:
                 fused_bs = self._base_score_from_fused(_bs_row)
             _nr = _bs_row.get("_n_rows_")
             n_rows = int(_nr) if _nr is not None else None
+            split_rows = _bs_row.get("_split_rows_")
         else:
             # pre-built cuts (continuation / pinned-cuts fits): no
             # sketch scan to ride, keep the standalone validation pass
@@ -750,7 +755,7 @@ class SparkBooster:
                 trees, history, best_it, bar_weights = fit_barrier(
                     p, obj, raw, fnames, cuts, cat_mask,
                     base_score, mono, isets, bar_n_part, evals_raw=evals_raw,
-                    prev_state=prev_state)
+                    prev_state=prev_state, split_rows=split_rows)
                 FIT_STAGE_TIMES["loop"] = round(time.monotonic() - _t1, 3)
                 if verbose and history:
                     # the barrier job returns the full eval history in

@@ -8,6 +8,9 @@ code is correct on a 1000-executor cluster:
 - shuffle partitions ~ cores locally; on a real cluster AQE coalesces
   from a larger initial number, so this knob is safe to raise.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- Driver heap sized from physical memory (``SPARK_GRAFT_DRIVER_MEM``
+  overrides), so an oversized collect fails as a JVM OOM rather than
+  an OS kill of the whole process tree.
 """
 
 from __future__ import annotations
@@ -15,6 +18,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """60% of physical memory, at most 48g: leaves room for the Python
+    workers and the OS beside the driver heap."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "48g"
+    return f"{min(48, max(1, int(0.6 * phys / (1 << 30))))}g"
 
 
 def get_session(app_name: str = "xgboost_spark", cpus: int | None = None) -> SparkSession:
@@ -31,7 +44,8 @@ def get_session(app_name: str = "xgboost_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_memory())
         # codegen-heavy plans (wide CASE WHEN ensembles, md5 chains)
         # overflow the default 240m JIT code cache, causing eviction
         # storms that deoptimize unrelated hot paths; size it generously
